@@ -170,6 +170,25 @@ object Main {
     }
   }
 
+  /** `compareDb --deep`'s problem lines, empty when every checksum
+    * matches: one `CHECKSUM MISMATCH` line naming the tables whose
+    * content differs, then one `CHECKSUM FAILED` line per table whose
+    * checksum could not be computed (an unreadable destination, a
+    * missing table), with the exception — a failure is not reported as
+    * corrupted content.
+    */
+  private[cli] def checksumReport(
+      spark: SparkSession,
+      src: graft.sources.TableSource,
+      dest: graft.sources.TableSource,
+      tables: Seq[String]): Seq[String] = {
+    val verdicts = tables.map(t =>
+      t -> scala.util.Try(Comparator.compareChecksums(spark, src, dest, t)))
+    val mismatched = verdicts.collect { case (t, scala.util.Success(false)) => t }
+    (if (mismatched.isEmpty) Nil else Seq(s"CHECKSUM MISMATCH: ${mismatched.mkString(", ")}")) ++
+      verdicts.collect { case (t, scala.util.Failure(e)) => s"CHECKSUM FAILED: $t: $e" }
+  }
+
   private def compareDb(spark: SparkSession, opts: Map[String, String]): Unit = {
     val src = FixtureSource(require(opts, "src"))
     // a jdbc: destination re-verifies through the same read-back source
@@ -181,13 +200,10 @@ object Main {
     // --deep: beyond the reference's count compare — exact content
     // checksums per table (order-insensitive hash sums)
     if (opts.get("deep").exists(_.toBoolean)) {
-      val bad = tables.filterNot(t =>
-        try Comparator.compareChecksums(spark, src, dest, t)
-        catch { case _: Exception => false })
-      if (bad.nonEmpty) {
-        println(s"CHECKSUM MISMATCH: ${bad.mkString(", ")}")
-        sys.exit(1)
-      } else println(s"checksums OK for ${tables.size} tables")
+      val lines = checksumReport(spark, src, dest, tables)
+      lines.foreach(println)
+      if (lines.nonEmpty) sys.exit(1)
+      else println(s"checksums OK for ${tables.size} tables")
     }
     val failed = Comparator.failures(report)
     if (failed.count() > 0) {

@@ -153,9 +153,9 @@ object Snapshots {
     val tmp = new org.apache.hadoop.fs.Path(info, ".info.json.tmp")
     val dst = new org.apache.hadoop.fs.Path(info, "info.json")
     val out = fs.create(tmp, true)
-    try out.write(
-      (s"""{"version":$version,"tag":"$tag",""" +
-        s""""archived_at_ms":$archivedAtMs}""").getBytes("UTF-8"))
+    try out.write(infoJson.writeValueAsBytes(infoJson.createObjectNode()
+      .put("format", 2).put("version", version).put("tag", tag)
+      .put("archived_at_ms", archivedAtMs)))
     finally out.close()
     fs.delete(dst, false)
     if (!fs.rename(tmp, dst))
@@ -214,8 +214,34 @@ object Snapshots {
     org.apache.spark.sql.types.StructField("archived_at_ms",
       org.apache.spark.sql.types.LongType)))
 
+  /** The sidecar codec. Current sidecars are Jackson-written JSON with
+    * a `"format":2` key, so any tag round-trips (quotes, backslashes,
+    * newlines, non-ASCII). Sidecars written before that key existed
+    * spliced the tag in unescaped; they keep reading through [[infoRe]]
+    * exactly as they always did — a Jackson parse would turn their
+    * backslashes into escapes.
+    */
+  private val infoJson = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private val infoRe =
     """\{"version":(\d+),"tag":"([^"]*)","archived_at_ms":(\d+)\}""".r
+
+  /** A sidecar's (version, tag, archived_at_ms) row; None for a torn
+    * or corrupt file (no annotation).
+    */
+  private[plans] def parseInfo(text: String): Option[org.apache.spark.sql.Row] =
+    scala.util.Try(infoJson.readTree(text)).toOption.filter(_.has("format")) match {
+      case Some(n) =>
+        val (v, tag, ms) = (n.path("version"), n.path("tag"), n.path("archived_at_ms"))
+        if (v.isIntegralNumber && tag.isTextual && ms.isIntegralNumber)
+          Some(org.apache.spark.sql.Row(v.asLong, tag.textValue, ms.asLong))
+        else None
+      case None => text match {
+        case infoRe(v, tag, ms) =>
+          Some(org.apache.spark.sql.Row(v.toLong, tag, ms.toLong))
+        case _ => None
+      }
+    }
 
   private def readInfoRow(
       spark: SparkSession,
@@ -229,11 +255,7 @@ object Snapshots {
         val text =
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
           finally in.close()
-        text match {
-          case infoRe(v, tag, ms) =>
-            Some(org.apache.spark.sql.Row(v.toLong, tag, ms.toLong))
-          case _ => None // torn/corrupt file = no annotation
-        }
+        parseInfo(text)
       } else if (fs.listStatus(info).exists(s =>
           s.isFile && s.getPath.getName.endsWith(".parquet"))) {
         // legacy parquet sidecar (pre-r20 archive): explicit schema —

@@ -59,9 +59,7 @@ final case class FixtureSource(dir: String) extends SqlCapableSource {
         r.multipartIdentifier.last.toLowerCase
     }.toSet
     val referenced = tableNames(spark).filter(t => named.contains(t.toLowerCase))
-    referenced.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-    }
+    referenced.foreach(t => table(spark, t).createOrReplaceTempView(t))
     spark.sql(sql)
   }
   override def tableNames(spark: SparkSession): Seq[String] = {
@@ -80,8 +78,12 @@ final case class FixtureSource(dir: String) extends SqlCapableSource {
         .toSeq
   }
 
+  /** A single-file table reads its schema from the parquet footer on
+    * the driver (no inference job); a directory table, or a session
+    * with `spark.sql.parquet.mergeSchema` on, infers through Spark.
+    */
   override def table(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    org.apache.spark.sql.graftbridge.ParquetSchemaBridge.read(spark, s"$dir/$name.parquet")
 }
 
 /** JDBC source with planner-driven partitioned reads — the Spark

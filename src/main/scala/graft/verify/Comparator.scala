@@ -439,15 +439,52 @@ object Comparator {
     }
   }
 
-  /** Deep compare of one table on both sides via [[checksum]]. */
+  /** Deep compare of one table on both sides via [[checksum]].
+    *
+    * The two fingerprints run at the same time: the source on the
+    * calling thread, the destination on one extra thread created here.
+    * A thread created by the caller inherits the caller's Spark local
+    * properties (job group, job tags), so cancelling the caller's work
+    * cancels both sides — the inheritance [[compareCounts]]' pool
+    * threads rely on too. Both sides also carry a call-private tag:
+    * the first side to fail cancels the other's jobs, the call waits
+    * for both and rethrows that first failure, so no job outlives it.
+    */
   def compareChecksums(
       spark: SparkSession,
       src: TableSource,
       dest: TableSource,
       table: String
   ): Boolean = {
-    val s = checksum(src.table(spark, table)).collect()(0)
-    val d = checksum(dest.table(spark, table)).collect()(0)
-    s == d
+    val sc = spark.sparkContext
+    val tag = s"graft-checksum-${java.util.UUID.randomUUID()}"
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    // never throws: a failed side records its error, cancels the other
+    // side and yields null, so the caller always reaches the join below.
+    // A side that has not submitted its job when the other fails skips it.
+    def fingerprint(side: TableSource): org.apache.spark.sql.Row =
+      try {
+        val fp = checksum(side.table(spark, table))
+        if (firstFailure.get != null) null else fp.collect()(0)
+      } catch { case e: Throwable =>
+        if (firstFailure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+        null
+      }
+    sc.addJobTag(tag)
+    try {
+      var d: org.apache.spark.sql.Row = null
+      val destSide = new Thread(() => d = fingerprint(dest), "graft-checksum-dest")
+      destSide.setDaemon(true)
+      destSide.start()
+      val s = fingerprint(src)
+      try destSide.join()
+      catch { case e: InterruptedException =>
+        sc.cancelJobsWithTag(tag)
+        destSide.join()
+        throw e
+      }
+      Option(firstFailure.get).foreach(e => throw e)
+      s == d
+    } finally sc.removeJobTag(tag)
   }
 }

@@ -395,4 +395,38 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.readVersion(spark, dir, 1L).count() === 400L)
     assert(spark.read.parquet(dir).count() === 400L)
   }
+
+  test("_version_info tags round-trip: quote, backslash, newline, non-ASCII; older sidecars read back as before") {
+    import spark.implicits._
+    val dir = freshCorpus("graft_infotag", n = 4)
+    Snapshots.enableVersioning(spark, dir)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = Snapshots.versionsRoot(fs.makeQualified(path))
+    val tags = Seq("plain", "say \"hi\"", "C:\\tmp\\new", "two\nlines", "réécrit 版本 \u0001")
+    tags.zipWithIndex.foreach { case (tag, i) =>
+      val copy = new org.apache.hadoop.fs.Path(root.getParent, s"copy_$i")
+      Seq((i.toLong, "x")).toDF("id", "v").write.parquet(copy.toString)
+      Snapshots.archive(spark, fs, root, copy, tag)
+    }
+    def listedTags() = Snapshots.listVersions(spark, dir).collect().map(_.getString(1)).toSeq
+    assert(listedTags() === tags)
+    // a purge rewrites every matching version and carries its sidecar over
+    Snapshots.purgeVersions(spark, dir, col("v") === "x")
+    assert(listedTags() === tags)
+
+    // sidecars written before the Jackson codec spliced the tag in raw;
+    // they must keep reading back exactly as the old reader read them
+    val legacy = """{"version":1,"tag":"a\b \n c","archived_at_ms":42}"""
+    assert(Snapshots.parseInfo(legacy).map(_.toSeq) ===
+      Some(Seq(1L, "a\\b \\n c", 42L)))
+    val info = new org.apache.hadoop.fs.Path(root, "v=1/_version_info/info.json")
+    val out = fs.create(info, true)
+    try out.write(legacy.getBytes("UTF-8")) finally out.close()
+    assert(listedTags().head === "a\\b \\n c")
+    // torn files stay unannotated
+    assert(Snapshots.parseInfo("""{"format":2,"version":1,"tag":"x""") === None)
+    assert(Snapshots.parseInfo("""{"format":2,"version":1,"archived_at_ms":3}""") === None)
+    assert(Snapshots.parseInfo("") === None)
+  }
 }
